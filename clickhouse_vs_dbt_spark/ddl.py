@@ -43,7 +43,14 @@ from __future__ import annotations
 
 import re
 
-from clickhouse_vs_dbt_spark.dialect import DialectError
+from clickhouse_vs_dbt_spark.dialect import (
+    DialectError,
+    _is_skippable,
+    _next_code,
+    _split_commas,
+    _tokens,
+    _top_level,
+)
 
 _SCALAR = {
     "UInt8": "SMALLINT",
@@ -69,26 +76,13 @@ _TYPE_RE = re.compile(r"\s*([A-Za-z0-9_]+)\s*(\((.*)\))?\s*\Z", re.DOTALL)
 
 
 def _split_top(s: str) -> list[str]:
-    """Split on top-level commas (parens and quotes protected)."""
-    out, depth, start, i, n = [], 0, 0, 0, len(s)
-    in_str = False
-    while i < n:
-        c = s[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
-        i += 1
-    out.append(s[start:])
-    return [p.strip() for p in out if p.strip()]
+    """The non-empty depth-0 comma parts of ``s``, stripped, with
+    each comment replaced by a space."""
+    parts = (
+        "".join(" " if _is_skippable(t) else t for t in p).strip()
+        for p in _split_commas(_tokens(s))
+    )
+    return [p for p in parts if p]
 
 
 def convert_type(ch: str) -> str:
@@ -173,39 +167,18 @@ _COL_STOP = frozenset(
 
 
 def _convert_coldef(d: str) -> str:
-    parts = d.split(None, 1)
-    if len(parts) != 2:
+    toks = _tokens(d)
+    ty = _next_code(toks, 1)
+    if ty >= len(toks):
         raise DialectError(f"unparseable column definition: {d!r}")
-    name, rest = parts
-    # cut the type expression at the first suffix keyword — scanning
-    # OUTSIDE quotes and parens, so an Enum value or default string
-    # literally containing DEFAULT/ALIAS/... never truncates the type
-    cut = len(rest)
-    depth = 0
-    in_str = False
-    i = 0
-    while i < len(rest):
-        c = rest[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            j = i
-            while j < len(rest) and (rest[j].isalnum() or rest[j] == "_"):
-                j += 1
-            if rest[i:j].upper() in _COL_STOP and i > 0:
-                cut = i
-                break
-            i = j
-            continue
-        i += 1
-    return f"{name} {convert_type(rest[:cut].strip())}"
+    # cut the type expression at the first depth-0 suffix keyword, so
+    # an Enum value or default string literally containing
+    # DEFAULT/ALIAS/... never truncates the type
+    cut = next(
+        (i for i in _top_level(toks, ty + 1) if toks[i].upper() in _COL_STOP),
+        len(toks),
+    )
+    return f"{toks[0]} {convert_type(''.join(toks[ty:cut]).strip())}"
 
 
 _DDL_RE = re.compile(
@@ -693,85 +666,27 @@ _MERGEABLE = {"count": "sum", "count_if": "sum", "sum": "sum",
 def _split_select_list(select_sql: str) -> tuple[str, str]:
     """Return (select-list text, rest-from-FROM) of a transpiled
     single-SELECT statement, splitting at the depth-0 FROM."""
-    s = select_sql
-    m = re.match(r"(?is)\s*SELECT\s+", s)
-    if not m:
+    toks = _tokens(select_sql)
+    sel = _next_code(toks, 0)
+    if sel >= len(toks) or toks[sel].upper() != "SELECT":
         raise DialectError("materialized view body must be a SELECT")
-    i = m.end()
-    depth = 0
-    in_str = False
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and s[i : i + 4].upper() == "FROM" and (
-            i + 4 == len(s) or not (s[i + 4].isalnum() or s[i + 4] == "_")
-        ) and not (s[i - 1].isalnum() or s[i - 1] == "_"):
-            return s[m.end() : i].strip(), s[i:]
-        i += 1
+    for i in _top_level(toks, sel + 1):
+        if toks[i].upper() == "FROM":
+            return "".join(toks[sel + 1:i]).strip(), "".join(toks[i:])
     raise DialectError("materialized view SELECT has no FROM clause")
 
 
 def _last_top_as(item: str) -> tuple[str, str | None]:
     """Split ``expr AS alias`` at the LAST depth-0 AS (CAST(x AS T)
     stays inside its parens)."""
-    depth = 0
-    in_str = False
-    last = None
-    i = 0
-    while i < len(item):
-        c = item[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and item[i : i + 2].upper() == "AS" and (
-            i == 0 or not (item[i - 1].isalnum() or item[i - 1] == "_")
-        ) and (
-            i + 2 == len(item)
-            or not (item[i + 2].isalnum() or item[i + 2] == "_")
-        ):
-            last = i
-        i += 1
+    toks = _tokens(item)
+    last = max(
+        (i for i in _top_level(toks) if toks[i].upper() == "AS"),
+        default=None,
+    )
     if last is None:
         return item.strip(), None
-    return item[:last].strip(), item[last + 2 :].strip()
-
-
-def _strip_nested(s: str) -> str:
-    """Drop everything inside (), [] and '...' — leaves only the
-    top-level characters, for top-level-comma checks."""
-    out: list[str] = []
-    depth, in_str = 0, False
-    for c in s:
-        if in_str:
-            if c == "'":
-                in_str = False
-            continue
-        if c == "'":
-            in_str = True
-            continue
-        if c in "([":
-            depth += 1
-            continue
-        if c in ")]":
-            depth -= 1
-            continue
-        if depth == 0:
-            out.append(c)
-    return "".join(out)
+    return "".join(toks[:last]).strip(), "".join(toks[last + 1:]).strip()
 
 
 class MaterializedView:
@@ -1042,7 +957,7 @@ def transpile_materialized_view(
             arg = expr[cm.end():].rstrip()[:-1]
             if count_distinct:
                 arg = re.sub(r"(?is)^\s*DISTINCT\b", "", arg).strip()
-            if "," in _strip_nested(arg):
+            if len(_split_commas(_tokens(arg))) > 1:
                 raise DialectError(
                     f"{src_fn} in MV position takes a single expression"
                 )

@@ -131,7 +131,7 @@ from clickhouse_vs_dbt_spark.compat import register_clickhouse_compat
 
 _TOKEN_RE = re.compile(
     r"""
-      '(?:[^']|'')*'                    # single-quoted string ('' escape)
+      '(?:[^'\\]|\\.|'')*'              # single-quoted string ('' or \ escape)
     | "(?:[^"]|"")*"                    # double-quoted identifier
     | `[^`]*`                           # backtick identifier
     | [A-Za-z_][A-Za-z0-9_]*            # bare identifier / keyword
@@ -611,6 +611,72 @@ def _next_code(toks: list[str], i: int) -> int:
     return i
 
 
+def _prev_code(toks: list[str], i: int) -> int:
+    """Index of the previous non-whitespace, non-comment token, or -1."""
+    while i >= 0 and _is_skippable(toks[i]):
+        i -= 1
+    return i
+
+
+# Nesting: every helper below treats ( and [ alike, and sees quotes
+# and comments only as the single tokens _TOKEN_RE makes of them.
+
+
+def _match_close(toks: list[str], open_i: int) -> int:
+    """Index of the ) or ] matching the ( or [ at ``open_i``."""
+    depth = 0
+    for i in range(open_i, len(toks)):
+        if toks[i] in ("(", "["):
+            depth += 1
+        elif toks[i] in (")", "]"):
+            depth -= 1
+            if depth == 0:
+                return i
+    raise DialectError("unbalanced parentheses")
+
+
+def _match_open(toks: list[str], close_i: int) -> int:
+    """Index of the ( or [ matching the ) or ] at ``close_i``."""
+    depth = 0
+    for i in range(close_i, -1, -1):
+        if toks[i] in (")", "]"):
+            depth += 1
+        elif toks[i] in ("(", "["):
+            depth -= 1
+            if depth == 0:
+                return i
+    raise DialectError("unbalanced parentheses")
+
+
+def _top_level(toks: list, start: int = 0, end: int | None = None):
+    """Indices of the depth-0 tokens of ``toks[start:end]``, in order.
+    An opening bracket is yielded and its group skipped (an unclosed
+    group ends the walk); the close of the enclosing group, when the
+    walk reaches one, is yielded last."""
+    depth = 0
+    for i in range(start, len(toks) if end is None else end):
+        t = toks[i]
+        if depth == 0:
+            yield i
+        if t in ("(", "["):
+            depth += 1
+        elif t in (")", "]"):
+            if depth == 0:
+                return
+            depth -= 1
+
+
+def _split_commas(toks: list[str]) -> list[list[str]]:
+    """Split a token span on depth-0 commas."""
+    parts, s = [], 0
+    for i in _top_level(toks):
+        if toks[i] == ",":
+            parts.append(toks[s:i])
+            s = i + 1
+    parts.append(toks[s:])
+    return parts
+
+
 def _parse_args(
     toks: list[str], lparen: int, open_: str = "(", close: str = ")"
 ) -> tuple[list[str], int]:
@@ -618,32 +684,25 @@ def _parse_args(
     return the top-level comma-split arguments (each recursively
     transpiled) and the index just past the closing delimiter.
     ``()`` → []."""
-    depth = 0
-    i = lparen
     start = lparen + 1
     spans: list[tuple[int, int]] = []
-    while i < len(toks):
+    for i in _top_level(toks, start):
         t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-            if depth == 0:
-                if t != close:
-                    raise DialectError("mismatched () / [] nesting")
-                spans.append((start, i))
-                # drop_comments: args are re-joined onto one line, so a
-                # trailing `-- comment` would swallow the separator
-                args = [
-                    _walk(toks, a, b, drop_comments=True).strip()
-                    for a, b in spans
-                    if _next_code(toks, a) < b or len(spans) > 1
-                ]
-                return args, i + 1
-        elif t == "," and depth == 1:
+        if t == ",":
             spans.append((start, i))
             start = i + 1
-        i += 1
+        elif t in (")", "]"):
+            if t != close:
+                raise DialectError("mismatched () / [] nesting")
+            spans.append((start, i))
+            # drop_comments: args are re-joined onto one line, so a
+            # trailing `-- comment` would swallow the separator
+            args = [
+                _walk(toks, a, b, drop_comments=True).strip()
+                for a, b in spans
+                if _next_code(toks, a) < b or len(spans) > 1
+            ]
+            return args, i + 1
     raise DialectError("unbalanced parentheses in function call")
 
 
@@ -1584,21 +1643,6 @@ def _array_headed(expr: str) -> bool:
     return False
 
 
-def _paren_whole(ts: list[str]) -> bool:
-    """True when ``ts``'s leading '(' closes at its LAST token —
-    i.e. the parens wrap the whole span, not two operand groups
-    like ``(a) > (b)``."""
-    depth = 0
-    for m, t in enumerate(ts):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth == 0:
-                return m == len(ts) - 1
-    return False
-
-
 def _interval_ctx(ts: list[str], i: int) -> bool:
     """True when ``ts[i]`` sits at the UNIT position of an INTERVAL
     literal: scanning back through at most four quantity tokens
@@ -1653,12 +1697,7 @@ def _type_span_idents(ts: list[str]) -> set[int]:
             if j < n:
                 j += 1  # closing '>'
         if j < n and ts[j] == "(":
-            depth = 1
-            j += 1
-            while j < n and depth:
-                depth += ts[j] == "("
-                depth -= ts[j] == ")"
-                j += 1
+            j = _match_close(ts, j) + 1
         return j
 
     for i, t in enumerate(ts):
@@ -2700,8 +2739,6 @@ def _render_call(name: str, args: list[str]) -> str:
         return f"regexp_count({args[0]}, {args[1]})"
     if name == "levenshteinDistance" and len(args) == 2:
         return f"levenshtein({args[0]}, {args[1]})"
-    if name == "initcapUTF8" and len(args) == 1:
-        return f"initcap({args[0]})"
     # ---- r12 audit batch 15 ----------------------------------------
     if name == "ignore":
         # CH: evaluates its arguments and always returns 0 (a
@@ -5636,8 +5673,6 @@ def _render_call(name: str, args: list[str]) -> str:
                 "(session time zone is pinned UTC)"
             )
         return _render_call(name, args[:1])
-    if name == "fromUnixTimestamp64Milli" and len(args) == 1:
-        return f"timestamp_millis({args[0]})"
     if name == "fromUnixTimestamp64Second" and len(args) == 1:
         return f"timestamp_seconds({args[0]})"
     if name == "toUnixTimestamp64Second" and len(args) == 1:
@@ -5960,11 +5995,6 @@ def _render_call(name: str, args: list[str]) -> str:
             f"transform({args[0]}, "
             f"__v -> try_divide(CAST(__v AS DOUBLE), {nrm}))"
         )
-    if name == "arrayFold" and len(args) == 3:
-        # CH arrayFold(lambda, arr, init) ≡ Spark
-        # aggregate(arr, init, lambda) — same (acc, x) lambda order
-        lam, arr, init = args
-        return f"aggregate({arr}, {init}, {lam})"
     if name in ("arrayPartialSort", "arrayPartialReverseSort") \
             and len(args) == 2:
         # CH guarantees the first N positions sorted and leaves the
@@ -6202,24 +6232,6 @@ def _render_call(name: str, args: list[str]) -> str:
         return (
             f"concat(format_string('%.2f', CAST({x} AS DOUBLE) / "
             f"power(1000, {p})), ' ', element_at({units}, {p} + 1))"
-        )
-    if name == "formatReadableQuantity" and len(args) == 1:
-        # 1234567 → '1.23 million' (CH: thousand/million/billion/
-        # trillion words, %.2f mantissa; values < 1000 print plain
-        # %.2f with no unit) — the DecimalSize pattern with word
-        # units and an empty zeroth unit
-        x = args[0]
-        units = (
-            "array('', ' thousand', ' million', ' billion', "
-            "' trillion', ' quadrillion')"
-        )
-        p = (
-            f"CAST(least(greatest(floor(log(1000, "
-            f"greatest(abs(CAST({x} AS DOUBLE)), 1.0))), 0), 5) AS INT)"
-        )
-        return (
-            f"concat(format_string('%.2f', CAST({x} AS DOUBLE) / "
-            f"power(1000, {p})), element_at({units}, {p} + 1))"
         )
     if name == "arrayReduce" and len(args) >= 2:
         # arrayReduce('agg', arr): the common aggregate heads map to
@@ -7079,8 +7091,6 @@ def _render_call(name: str, args: list[str]) -> str:
             "javaHash/hiveHash class) with no Spark register — "
             "crc32() maps for checksums, xxHash64 for role parity"
         )
-    if name == "arrayShuffle" and len(args) == 1:
-        return f"shuffle({args[0]})"
     if name == "arrayShuffle" and len(args) == 2:
         # seeded form: DETERMINISTIC permutation by md5 rank of
         # (seed, position) — reproducible across engines where CH's
@@ -9027,16 +9037,11 @@ def _rewrite_map_apply(lam: str, m: str) -> str:
     the two parameter identifiers (qualified ``x.k`` field accesses
     are left alone)."""
     toks = _tokens(lam)
-    depth, arrow = 0, None
-    for i in range(len(toks) - 1):
-        t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif t == "-" and toks[i + 1] == ">" and depth == 0:
-            arrow = i
-            break
+    arrow = next(
+        (i for i in _top_level(toks, 0, len(toks) - 1)
+         if toks[i] == "-" and toks[i + 1] == ">"),
+        None,
+    )
     if arrow is None:
         raise DialectError(
             "mapApply's first argument must be a "
@@ -9058,15 +9063,7 @@ def _rewrite_map_apply(lam: str, m: str) -> str:
             "mapApply's lambda must return a (key, value) tuple"
         )
     inner = body[1:-1]
-    depth, cut = 0, None
-    for i, t in enumerate(inner):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif t == "," and depth == 0:
-            cut = i
-            break
+    cut = next((i for i in _top_level(inner) if inner[i] == ","), None)
     if cut is None:
         raise DialectError(
             "mapApply's lambda must return a (key, value) tuple"
@@ -9912,6 +9909,13 @@ _KEYWORD_STOP = {
 }
 
 
+#: tokens that end one ``expr AS alias`` item of an ARRAY JOIN list
+_ARRAY_JOIN_STOP = _KEYWORD_STOP | {
+    "AS", ",", "WHERE", "GROUP", "PREWHERE", "INNER", "JOIN", "LEFT",
+    "RIGHT", "FULL", "CROSS",
+}
+
+
 def _rewrite_clauses(toks: list[str]) -> list[str]:
     """Clause-level ClickHouse syntax, before expression rewriting:
 
@@ -10071,31 +10075,13 @@ def _rewrite_clauses(toks: list[str]) -> list[str]:
                 k = j + 1
                 end_i = None
                 while True:
-                    depth = 0
                     expr_start = k
-                    as_i = None
-                    while k < len(out):
-                        t = out[k]
-                        if t in ("(", "["):
-                            depth += 1
-                        elif t in (")", "]"):
-                            if depth == 0:
-                                break
-                            depth -= 1
-                        elif depth == 0:
-                            u = t.upper()
-                            if u == "AS":
-                                as_i = k
-                                break
-                            if u in _KEYWORD_STOP or u in (
-                                "WHERE", "GROUP", "PREWHERE", "INNER",
-                                "JOIN", "LEFT", "RIGHT", "FULL", "CROSS",
-                            ):
-                                break
-                            if t == ",":
-                                break
-                        k += 1
-                    if as_i is None:
+                    as_i = next(
+                        (m for m in _top_level(out, k)
+                         if out[m].upper() in _ARRAY_JOIN_STOP),
+                        None,
+                    )
+                    if as_i is None or out[as_i].upper() != "AS":
                         raise DialectError(
                             "ARRAY JOIN without AS <alias> shadows the "
                             "array column's name; write ARRAY JOIN "
@@ -10131,91 +10117,56 @@ def _rewrite_clauses(toks: list[str]) -> list[str]:
                 i = start
                 continue
         i += 1
-    # strip top-level SETTINGS ... (to end of statement / set-op / paren)
+    # strip SETTINGS ... (to end of statement / set-op / paren) at
+    # any depth (ClickHouse allows SETTINGS on subquery SELECTs too);
+    # only the real clause shape `SETTINGS name = value` — a column
+    # that happens to be named settings is never followed by `ident =`
     i = 0
-    depth = 0
     while i < len(out):
-        t = out[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.upper() == "FORMAT":
-            # only at statement end (ClickHouse grammar): FORMAT <name>
-            # followed by nothing or ';' — never mid-query, so a column
-            # actually named `format` is untouched
-            j = _next_code(out, i + 1)
-            k = _next_code(out, j + 1) if j < len(out) else len(out)
-            if (
-                j < len(out)
-                and _is_ident(out[j])
-                and (k >= len(out) or out[k] == ";")
-            ):
-                del out[i : j + 1]
-                continue
-        elif t.upper() == "SETTINGS":
-            # at any depth (ClickHouse allows SETTINGS on subquery
-            # SELECTs too); only the real clause shape `SETTINGS name =
-            # value` — a column that happens to be named settings is
-            # never followed by `ident =`
-            g1 = _next_code(out, i + 1)
-            g2 = _next_code(out, g1 + 1) if g1 < len(out) else len(out)
-            if not (
-                g1 < len(out)
-                and _is_ident(out[g1])
-                and g2 < len(out)
-                and out[g2] == "="
-            ):
-                i += 1
-                continue
-            j = i
-            d2 = 0
-            while j < len(out):
-                tj = out[j]
-                if tj in ("(", "["):
-                    d2 += 1
-                elif tj in (")", "]"):
-                    if d2 == 0:
-                        break
-                    d2 -= 1
-                elif d2 == 0 and (
-                    tj == ";" or tj.upper() in ("UNION", "EXCEPT", "INTERSECT")
-                ):
-                    break
-                j += 1
+        if out[i].upper() == "SETTINGS" and (
+            (g1 := _next_code(out, i + 1)) < len(out)
+            and _is_ident(out[g1])
+            and (g2 := _next_code(out, g1 + 1)) < len(out)
+            and out[g2] == "="
+        ):
+            j = next(
+                (j for j in _top_level(out, i)
+                 if out[j] in (")", "]", ";")
+                 or out[j].upper() in ("UNION", "EXCEPT", "INTERSECT")),
+                len(out),
+            )
             del out[i:j]
             continue
         i += 1
+    # FORMAT <name> only at statement end (ClickHouse grammar):
+    # followed by nothing or ';' — never mid-query, so a column
+    # actually named `format` is untouched
+    formats = []
+    for i in _top_level(out):
+        if (
+            out[i].upper() == "FORMAT"
+            and (j := _next_code(out, i + 1)) < len(out)
+            and _is_ident(out[j])
+            and ((k := _next_code(out, j + 1)) >= len(out) or out[k] == ";")
+        ):
+            formats.append(i)
+    for i in reversed(formats):
+        del out[i:_next_code(out, i + 1) + 1]
     # GROUP BY ... WITH TOTALS
     i = 0
     while i < len(out):
         if out[i].upper() == "GROUP":
             j = _next_code(out, i + 1)
             if j < len(out) and out[j].upper() == "BY":
-                # find the end of the expression list at depth 0
-                k = j + 1
-                depth = 0
-                end = None
-                while k < len(out):
-                    t = out[k]
-                    if t in ("(", "["):
-                        depth += 1
-                    elif t in (")", "]"):
-                        if depth == 0:
-                            end = k
-                            break
-                        depth -= 1
-                    elif depth == 0 and t.upper() in _KEYWORD_STOP:
-                        end = k
-                        break
-                    k += 1
-                if end is None:
-                    end = len(out)
-                nxt = _next_code(out, end)
+                # the end of the expression list at depth 0
+                end = next(
+                    (k for k in _top_level(out, j + 1)
+                     if out[k].upper() in _KEYWORD_STOP),
+                    len(out),
+                )
                 if (
                     end < len(out)
                     and out[end].upper() == "WITH"
-                    and nxt == end
                     and (m := _next_code(out, end + 1)) < len(out)
                     and out[m].upper() == "TOTALS"
                 ):
@@ -10225,19 +10176,6 @@ def _rewrite_clauses(toks: list[str]) -> list[str]:
                     ]
         i += 1
     return out
-
-
-def _match_close(toks: list[str], open_i: int) -> int:
-    """Index of the ) matching the ( at ``open_i``."""
-    depth = 0
-    for i in range(open_i, len(toks)):
-        if toks[i] in ("(", "["):
-            depth += 1
-        elif toks[i] in (")", "]"):
-            depth -= 1
-            if depth == 0:
-                return i
-    raise DialectError("unbalanced parentheses")
 
 
 def _find_limit_by(toks: list[str]):
@@ -10300,36 +10238,23 @@ def _rewrite_limit_by(toks: list[str], resolve_columns=None) -> list[str]:
         seg_start, seg_end, limit_i, off, cnt, by_start = hit
         # optional ORDER BY before the LIMIT, at segment depth 0
         ord_start = ord_exprs_start = None
-        depth = 0
-        for i in range(seg_start, limit_i):
-            t = toks[i]
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.upper() == "ORDER":
+        for i in _top_level(toks, seg_start, limit_i):
+            if toks[i].upper() == "ORDER":
                 j = _next_code(toks, i + 1)
                 if j < limit_i and toks[j].upper() == "BY":
                     ord_start, ord_exprs_start = i, j + 1
         # BY expression list ends at segment-depth-0 LIMIT or seg_end
-        depth = 0
         by_end = seg_end
         tail = ""
-        for i in range(by_start, seg_end):
+        for i in _top_level(toks, by_start, seg_end):
             t = toks[i]
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.upper() in (
-                "UNION", "EXCEPT", "INTERSECT",
-            ):
+            if t.upper() in ("UNION", "EXCEPT", "INTERSECT"):
                 raise DialectError(
                     "LIMIT n BY followed by a set operation is "
                     "ambiguous; parenthesize the branch the LIMIT BY "
                     "belongs to"
                 )
-            elif depth == 0 and t.upper() == "LIMIT":
+            elif t.upper() == "LIMIT":
                 by_end = i
                 tail = "".join(toks[i:seg_end]).strip()
                 break
@@ -10392,16 +10317,11 @@ def _rewrite_limit_by(toks: list[str], resolve_columns=None) -> list[str]:
             # rank inside the query's own select list, where
             # unselected base-table columns are in scope
             head_toks = _tokens(head_text)
-            depth = 0
-            from_i = None
-            for hi, ht in enumerate(head_toks):
-                if ht in ("(", "["):
-                    depth += 1
-                elif ht in (")", "]"):
-                    depth -= 1
-                elif depth == 0 and ht.upper() == "FROM":
-                    from_i = hi
-                    break
+            from_i = next(
+                (hi for hi in _top_level(head_toks)
+                 if head_toks[hi].upper() == "FROM"),
+                None,
+            )
             if from_i is None:
                 raise DialectError("LIMIT BY: query has no FROM clause")
             head_with_rn = (
@@ -10463,42 +10383,30 @@ def _rewrite_with_fill(toks: list[str], resolve_columns=None) -> list[str]:
     step; FROM defaults to max, TO stays exclusive on the low side).
     Expression keys refuse with the events_gap_fill pointer."""
     # find the LAST top-level ORDER BY (set-op tails bind to it)
-    depth = 0
     ord_i = None
-    for i, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.upper() == "ORDER":
+    for i in _top_level(toks):
+        if toks[i].upper() == "ORDER":
             j = _next_code(toks, i + 1)
             if j < len(toks) and toks[j].upper() == "BY":
                 ord_i = i
     if ord_i is None:
         return toks
     by_i = _next_code(toks, ord_i + 1)
-    # scan the ORDER BY list for a depth-0 WITH FILL
-    depth = 0
-    fill_i = None
-    i = by_i + 1
-    while i < len(toks):
-        t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.upper() == "WITH":
-            j = _next_code(toks, i + 1)
-            if j < len(toks) and toks[j].upper() == "FILL":
-                fill_i = i
-                fill_kw_end = j + 1
-                break
-            break  # WITH TOTALS / ROLLUP / CUBE — not ours
-        elif depth == 0 and t.upper() in ("LIMIT", "SETTINGS", "FORMAT", ";"):
-            break
-        i += 1
-    if fill_i is None:
+    # the ORDER BY list ends at a depth-0 WITH FILL, or not ours
+    # (WITH TOTALS / ROLLUP / CUBE, LIMIT, ...)
+    fill_i = next(
+        (i for i in _top_level(toks, by_i + 1) if toks[i].upper() in (
+            "WITH", "LIMIT", "SETTINGS", "FORMAT", ";",
+        )),
+        len(toks),
+    )
+    fill_kw_end = _next_code(toks, fill_i + 1)
+    if not (
+        fill_kw_end < len(toks) and toks[fill_i].upper() == "WITH"
+        and toks[fill_kw_end].upper() == "FILL"
+    ):
         return toks
+    fill_kw_end += 1
     # ORDER BY list: plain leading keys (grouping axis), the LAST one
     # carries the fill; ASC/DESC per key, DESC allowed on the fill
     # key.  The fill key may be an EXPRESSION (ORDER BY
@@ -10578,19 +10486,10 @@ def _rewrite_with_fill(toks: list[str], resolve_columns=None) -> list[str]:
         if u not in ("FROM", "TO", "STEP"):
             raise DialectError(f"WITH FILL: unexpected token {toks[j]}")
         k = _next_code(toks, j + 1)
-        depth = 0
-        e = k
-        while e < len(toks):
-            t = toks[e]
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                depth -= 1
-            elif depth == 0 and (
-                t.upper() in _FILL_STOP or t == ";"
-            ):
-                break
-            e += 1
+        e = next(
+            (e for e in _top_level(toks, k) if toks[e].upper() in _FILL_STOP),
+            len(toks),
+        )
         expr = "".join(toks[k:e]).strip()
         if not expr:
             raise DialectError(f"WITH FILL {u}: missing expression")
@@ -10697,26 +10596,6 @@ def _rewrite_with_fill(toks: list[str], resolve_columns=None) -> list[str]:
     if tail:
         repl += f" {tail}"
     return _tokens(repl)
-
-
-def _match_open(toks: list[str], close_i: int) -> int:
-    """Index of the ( matching the ) at ``close_i`` (backward scan)."""
-    depth = 0
-    for i in range(close_i, -1, -1):
-        if toks[i] in (")", "]"):
-            depth += 1
-        elif toks[i] in ("(", "["):
-            depth -= 1
-            if depth == 0:
-                return i
-    raise DialectError("unbalanced parentheses")
-
-
-def _prev_code(toks: list[str], i: int) -> int:
-    """Index of the previous non-whitespace/comment token, or -1."""
-    while i >= 0 and _is_skippable(toks[i]):
-        i -= 1
-    return i
 
 
 #: ASOF inequality direction → (window ts ordering, tie preference).
@@ -11064,40 +10943,8 @@ def _parse_asof_on(toks, on_i, l_alias, r_alias):
     ``<alias>.<col> <op> <alias>.<col>`` with one side qualified by
     the right alias — ClickHouse ASOF ON requires >=1 equality and
     EXACTLY one inequality (which defines the match direction)."""
-    stop = {
-        "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
-        "SETTINGS", "WINDOW", "JOIN", "LEFT", "RIGHT", "INNER",
-        "FULL", "CROSS", "ASOF", "ANY", "QUALIFY",
-    }
-    i = _next_code(toks, on_i + 1)
-    end = i
-    depth = 0
-    while end < len(toks):
-        t = toks[end]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif depth == 0 and (
-            t == ";" or (_is_ident(t) and t.upper() in stop)
-        ):
-            break
-        end += 1
-    span = [t for t in toks[i:end] if not _is_skippable(t)]
-    # split on top-level AND
-    conjuncts: list[list[str]] = [[]]
-    d = 0
-    for t in span:
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        if d == 0 and t.upper() == "AND":
-            conjuncts.append([])
-        else:
-            conjuncts[-1].append(t)
+    i, end = _any_on_span(toks, on_i)
+    conjuncts = _and_split([t for t in toks[i:end] if not _is_skippable(t)])
     eq_pairs: list[tuple[str, str]] = []
     ineq: tuple[str, str, str] | None = None
     for c in conjuncts:
@@ -11304,22 +11151,24 @@ def _any_on_span(toks, on_i):
         "FULL", "CROSS", "ASOF", "ANY", "QUALIFY",
     }
     i = _next_code(toks, on_i + 1)
-    end = i
-    depth = 0
-    while end < len(toks):
-        t = toks[end]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif depth == 0 and (
-            t == ";" or (_is_ident(t) and t.upper() in stop)
-        ):
-            break
-        end += 1
+    end = next(
+        (e for e in _top_level(toks, i)
+         if toks[e] in (")", "]", ";")
+         or (_is_ident(toks[e]) and toks[e].upper() in stop)),
+        len(toks),
+    )
     return i, end
+
+
+def _and_split(span: list[str]) -> list[list[str]]:
+    """Split a token span on depth-0 AND."""
+    parts, s = [], 0
+    for k in _top_level(span):
+        if span[k].upper() == "AND":
+            parts.append(span[s:k])
+            s = k + 1
+    parts.append(span[s:])
+    return parts
 
 
 def _any_on_conjuncts(toks, i, end):
@@ -11328,32 +11177,10 @@ def _any_on_conjuncts(toks, i, end):
     whole-conjunct parens — ``ON (l.x > r.y)`` must classify the
     same as the bare spelling (code-review r13d: the wrapped form
     silently fell to the 40x LATERAL plan)."""
-    span = [t for t in toks[i:end] if not _is_skippable(t)]
-    conjuncts: list[list[str]] = [[]]
-    d = 0
-    for t in span:
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        if d == 0 and t.upper() == "AND":
-            conjuncts.append([])
-        else:
-            conjuncts[-1].append(t)
+    conjuncts = _and_split([t for t in toks[i:end] if not _is_skippable(t)])
     for n, c in enumerate(conjuncts):
-        while len(c) >= 2 and c[0] == "(" and c[-1] == ")":
-            depth = 0
-            whole = True
-            for m, t in enumerate(c):
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    depth -= 1
-                    if depth == 0 and m != len(c) - 1:
-                        whole = False  # e.g. (a) > (b)
-                        break
-            if not whole:
-                break
+        # whole-conjunct parens only, not e.g. (a) > (b)
+        while len(c) >= 2 and c[0] == "(" and _match_close(c, 0) == len(c) - 1:
             c = c[1:-1]
         conjuncts[n] = c
     return conjuncts
@@ -11470,13 +11297,9 @@ def _split_cmp_conjunct(c: list[str]):
     """Split one conjunct's code tokens on its depth-0 comparison
     operator → (lhs tokens, op string, rhs tokens), or None (no
     depth-0 comparison — e.g. an OR group or function predicate)."""
-    depth = 0
-    for n, t in enumerate(c):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and (t in _CMP_SINGLE or t == "!"):
+    for n in _top_level(c):
+        t = c[n]
+        if t in _CMP_SINGLE or t == "!":
             nxt = c[n + 1] if n + 1 < len(c) else ""
             if t == "!" and nxt != "=":
                 return None
@@ -11570,26 +11393,15 @@ def _any_ineq_rewrite(
     # the plan to the LATERAL fallback.
     seg = _owning_select_segment(toks, splice_start)
     sel_i = seg[0]
-    depth = 0
-    for n in range(seg[0], min(splice_start, seg[1])):
-        t = toks[n]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() == "SELECT":
+    for n in _top_level(toks, seg[0], min(splice_start, seg[1])):
+        if toks[n].upper() == "SELECT":
             sel_i = n
     star = False
-    depth = 0
-    for n in range(sel_i, seg[1]):
+    for n in _top_level(toks, sel_i, seg[1]):
         t = toks[n]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif _is_ident(t) and depth == 0 and t.upper() == "FROM":
+        if t.upper() == "FROM":
             break
-        elif t == "*" and depth == 0:
+        if t == "*":
             # depth 0 only: a star inside a parenthesized scalar
             # subquery can't leak the derived form's helper columns
             # (code-review r12c)
@@ -12109,24 +11921,16 @@ def _rewrite_with_scalars(toks: list[str]) -> list[str]:
         return toks
     # parse top-level comma-separated items until the SELECT
     items: list[tuple[int, int]] = []  # (start, end) token spans
-    j = i + 1
-    start = j
-    depth = 0
+    start = i + 1
     sel = None
-    while j < len(toks):
-        t = toks[j]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t == ",":
+    for j in _top_level(toks, start):
+        if toks[j] == ",":
             items.append((start, j))
             start = j + 1
-        elif depth == 0 and _is_ident(t) and t.upper() == "SELECT":
+        elif toks[j].upper() == "SELECT":
             sel = j
             items.append((start, j))
             break
-        j += 1
     if sel is None:
         return toks
     keep: list[str] = []
@@ -12188,16 +11992,11 @@ def _rewrite_bare_having(toks: list[str]) -> list[str]:
     (so provably no aggregates — aggregate+HAVING is native Spark),
     and a HAVING condition whose identifiers are all output names of
     the head: ``SELECT * FROM (head) __hv WHERE cond [tail]``."""
-    depth = 0
     sel = from_i = group_i = having_i = None
     n = len(toks)
-    for i, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t):
-            u = t.upper()
+    for i in _top_level(toks):
+        if _is_ident(toks[i]):
+            u = toks[i].upper()
             if u == "SELECT":
                 if sel is not None:
                     return toks  # set op / multi-select — skip
@@ -12218,23 +12017,12 @@ def _rewrite_bare_having(toks: list[str]) -> list[str]:
     if any("(" in t for t in toks[sel + 1:from_i]):
         return toks  # calls in the select list — could aggregate
     # condition span: HAVING .. depth-0 ORDER/LIMIT/SETTINGS/';'/end
-    depth = 0
-    cond_end = n
-    for i in range(having_i + 1, n):
-        t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and (
-            t == ";" or (
-                _is_ident(t)
-                and t.upper() in ("ORDER", "LIMIT", "SETTINGS",
-                                  "FORMAT", "OFFSET", "FETCH")
-            )
-        ):
-            cond_end = i
-            break
+    cond_end = next(
+        (i for i in _top_level(toks, having_i + 1) if toks[i].upper() in (
+            ";", "ORDER", "LIMIT", "SETTINGS", "FORMAT", "OFFSET", "FETCH",
+        )),
+        n,
+    )
     head = "".join(toks[sel:having_i]).strip()
     cond = "".join(toks[having_i + 1:cond_end]).strip()
     names = _select_out_names(head)
@@ -12271,18 +12059,7 @@ def _tuple_in_lhs(toks: list[str], p: int):
     index when the group is a genuine TUPLE of >= 2 elements (not a
     function call's argument list, not a row subquery), else
     None."""
-    depth = 0
-    lo = None
-    for j in range(p, -1, -1):
-        if toks[j] == ")":
-            depth += 1
-        elif toks[j] == "(":
-            depth -= 1
-            if depth == 0:
-                lo = j
-                break
-    if lo is None:
-        return None
+    lo = _match_open(toks, p)
     first = _next_code(toks, lo + 1)
     if first < len(toks) and _is_ident(toks[first]) and \
             toks[first].upper() in ("SELECT", "WITH"):
@@ -12537,14 +12314,9 @@ def _select_out_names(head_text: str):
     shape)."""
     toks = _tokens(head_text)
     sel = from_i = None
-    depth = 0
-    for i, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t):
-            u = t.upper()
+    for i in _top_level(toks):
+        if _is_ident(toks[i]):
+            u = toks[i].upper()
             if u == "SELECT" and sel is None:
                 sel = i
             elif u == "DISTINCT" and sel is not None and from_i is None:
@@ -12619,25 +12391,12 @@ def _rewrite_distinct_on(toks: list[str]) -> list[str]:
         ).strip()
         # find the splice point: first depth-0 LIMIT after the column
         # list, else the end of this SELECT's segment
-        depth = 0
-        j = oclose + 1
-        ins = None
-        while j < len(toks):
-            t = toks[j]
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and t == ";":
-                break
-            elif depth == 0 and _is_ident(t) and t.upper() in (
-                "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-            ):
-                break
-            j += 1
-        ins = j
+        ins = next(
+            (j for j in _top_level(toks, oclose + 1) if toks[j].upper() in (
+                ")", "]", ";", "LIMIT", "UNION", "INTERSECT", "EXCEPT",
+            )),
+            len(toks),
+        )
         toks = (
             toks[: i]
             + toks[oclose + 1 : ins]
@@ -12717,14 +12476,9 @@ def _rewrite_limit_ties(toks: list[str]) -> list[str]:
 
     Requires the top-level ORDER BY (as ClickHouse does)."""
     # find depth-0 LIMIT n WITH TIES
-    depth = 0
     hit = None
-    for i, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() == "WITH":
+    for i in _top_level(toks):
+        if toks[i].upper() == "WITH":
             j = _next_code(toks, i + 1)
             if j < len(toks) and toks[j].upper() == "TIES":
                 n_i = _prev_code(toks, i - 1)
@@ -12744,15 +12498,9 @@ def _rewrite_limit_ties(toks: list[str]) -> list[str]:
         raise DialectError("LIMIT ... WITH TIES must end the query")
     n = toks[n_i]
     # the top-level ORDER BY before the LIMIT
-    depth = 0
     ord_i = None
-    for i in range(l_i):
-        t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() == "ORDER":
+    for i in _top_level(toks, 0, l_i):
+        if toks[i].upper() == "ORDER":
             j = _next_code(toks, i + 1)
             if j < len(toks) and toks[j].upper() == "BY":
                 ord_i = i
@@ -12842,63 +12590,22 @@ _STAR_CLAUSE_STOPS = {
 }
 
 
-def _split_commas(toks: list[str]) -> list[list[str]]:
-    """Split a token span on top-level commas."""
-    parts: list[list[str]] = []
-    cur: list[str] = []
-    depth = 0
-    for t in toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if depth == 0 and t == ",":
-            parts.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    parts.append(cur)
-    return parts
-
-
 def _star_from_relation(toks: list[str], star_i: int) -> str | None:
     """Text of the FROM relation belonging to the SELECT containing
     the star at ``star_i`` (same nesting depth), or None.  The
     relation span ends at the next same-depth clause keyword or the
     closing paren of the enclosing subquery."""
-    depth = 0
-    from_i = None
-    for i in range(star_i, len(toks)):
-        t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            if depth == 0:
-                return None
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() == "FROM":
-            from_i = i
-            break
+    from_i = next(
+        (i for i in _top_level(toks, star_i) if toks[i].upper() == "FROM"),
+        None,
+    )
     if from_i is None:
         return None
-    depth = 0
-    end = len(toks)
-    for i in range(from_i + 1, len(toks)):
-        t = toks[i]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            if depth == 0:
-                end = i
-                break
-            depth -= 1
-        elif (
-            depth == 0
-            and _is_ident(t)
-            and t.upper() in _STAR_CLAUSE_STOPS
-        ):
-            end = i
-            break
+    end = next(
+        (i for i in _top_level(toks, from_i + 1)
+         if toks[i] in (")", "]") or toks[i].upper() in _STAR_CLAUSE_STOPS),
+        len(toks),
+    )
     rel = "".join(toks[from_i + 1 : end]).strip()
     return rel or None
 
@@ -13173,16 +12880,10 @@ def _rewrite_ternary(toks: list[str]) -> list[str]:
         # matching ':' — count nested '?' at any depth to its right
         need = 0
         colon = None
-        depth = 0
-        for j in range(q + 1, len(toks)):
-            t = toks[j]
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                depth -= 1
-            elif t == "?" and depth == 0:
+        for j in _top_level(toks, q + 1):
+            if toks[j] == "?":
                 need += 1
-            elif t == ":" and depth == 0:
+            elif toks[j] == ":":
                 if need == 0:
                     colon = j
                     break
@@ -13190,41 +12891,19 @@ def _rewrite_ternary(toks: list[str]) -> list[str]:
         if colon is None:
             raise DialectError("ternary '?' without matching ':'")
         # condition start: walk left at the same depth
-        depth = 0
-        start = 0
-        for j in range(q - 1, -1, -1):
-            t = toks[j]
-            if t in (")", "]"):
-                depth += 1
-            elif t in ("(", "["):
-                if depth == 0:
-                    start = j + 1
-                    break
-                depth -= 1
-            elif depth == 0 and (
-                t == ","
-                or (_is_ident(t) and t.upper() in _TERNARY_STOP)
-            ):
-                start = j + 1
-                break
+        j = q - 1
+        while j >= 0 and not (
+            toks[j] in ("(", "[", ",") or toks[j].upper() in _TERNARY_STOP
+        ):
+            j = _match_open(toks, j) - 1 if toks[j] in (")", "]") else j - 1
+        start = j + 1
         # else-branch end: walk right from the colon
-        depth = 0
-        end = len(toks)
-        for j in range(colon + 1, len(toks)):
-            t = toks[j]
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                if depth == 0:
-                    end = j
-                    break
-                depth -= 1
-            elif depth == 0 and (
-                t in (",", ";")
-                or (_is_ident(t) and t.upper() in _TERNARY_STOP)
-            ):
-                end = j
-                break
+        end = next(
+            (j for j in _top_level(toks, colon + 1)
+             if toks[j] in (")", "]", ",", ";")
+             or toks[j].upper() in _TERNARY_STOP),
+            len(toks),
+        )
         cond = "".join(toks[start:q]).strip()
         then = "".join(toks[q + 1 : colon]).strip()
         els = "".join(toks[colon + 1 : end]).strip()
@@ -13413,22 +13092,15 @@ def _rewrite_sample_clause(toks: list[str], engine_info=None):
         end = after - 1  # last token of the SAMPLE clause
         # the relation before SAMPLE: walk back to the nearest FROM at
         # the same depth; the span must be a simple table reference
-        depth = 0
-        from_i = None
-        for b in range(s_i - 1, -1, -1):
-            t = toks[b]
-            if t in (")", "]"):
-                depth += 1
-            elif t in ("(", "["):
-                if depth == 0:
-                    break
-                depth -= 1
-            elif (
-                depth == 0 and _is_ident(t) and t.upper() == "FROM"
-            ):
-                from_i = b
-                break
-        if from_i is None:
+        from_i = s_i - 1
+        while from_i >= 0 and toks[from_i] not in ("(", "[") and (
+            toks[from_i].upper() != "FROM"
+        ):
+            from_i = (
+                _match_open(toks, from_i) if toks[from_i] in (")", "]")
+                else from_i
+            ) - 1
+        if from_i < 0 or toks[from_i].upper() != "FROM":
             raise DialectError("SAMPLE clause without a FROM table")
         rel_code = [
             t
@@ -13547,22 +13219,10 @@ _PASTE_NOT_ALIAS = frozenset(
 
 
 def _split_top_commas(text: str) -> list[str]:
-    """Split an expression list on top-level commas (paren/bracket
-    nesting opaque via the tokenizer)."""
-    parts, cur, depth = [], [], 0
-    for t in _tokens(text):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if t == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        parts.append("".join(cur))
-    return parts
+    """Text form of :func:`_split_commas`; an empty last part is
+    dropped."""
+    parts = ["".join(p) for p in _split_commas(_tokens(text))]
+    return parts[:-1] if parts[-1] == "" else parts
 
 
 #: fixed-width reinterpret targets: name → (byte width, signed)
@@ -13785,29 +13445,16 @@ def _tuple_fields(arg: str) -> list[str] | None:
 def _top_order_by(body: list[str]) -> str | None:
     """The top-level ``ORDER BY`` key list of a subquery body (text up
     to the next top-level LIMIT/OFFSET/SETTINGS), or None."""
-    depth = 0
     n = len(body)
-    for i, t in enumerate(body):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() == "ORDER":
+    for i in _top_level(body):
+        if body[i].upper() == "ORDER":
             j = _next_code(body, i + 1)
-            if j < n and _is_ident(body[j]) and body[j].upper() == "BY":
-                d2, end = 0, n
-                for m in range(j + 1, n):
-                    t2 = body[m]
-                    if t2 in ("(", "["):
-                        d2 += 1
-                    elif t2 in (")", "]"):
-                        d2 -= 1
-                    elif (
-                        d2 == 0 and _is_ident(t2)
-                        and t2.upper() in ("LIMIT", "OFFSET", "SETTINGS")
-                    ):
-                        end = m
-                        break
+            if j < n and body[j].upper() == "BY":
+                end = next(
+                    (m for m in _top_level(body, j + 1) if body[m].upper()
+                     in ("LIMIT", "OFFSET", "SETTINGS")),
+                    n,
+                )
                 keys = "".join(body[j + 1:end]).strip()
                 return keys or None
     return None
@@ -13988,19 +13635,12 @@ def _paste_ranked_side(side_sql: str, order_keys: str) -> str:
     ):
         return global_form
     s_toks = _tokens(side_sql)
-    depth = 0
-    for t in s_toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif _is_ident(t) and (
-            (depth == 0 and t.upper() == "LIMIT")
-            or t in ("rand", "randn", "uuid", "shuffle",
-                     "generateUUIDv4", "generateUUIDv7",
-                     "generateSnowflakeID", "randCanonical")
-        ):
-            return global_form
+    if any(
+        t in ("rand", "randn", "uuid", "shuffle", "generateUUIDv4",
+              "generateUUIDv7", "generateSnowflakeID", "randCanonical")
+        for t in s_toks
+    ) or any(s_toks[k].upper() == "LIMIT" for k in _top_level(s_toks)):
+        return global_form
     nb = 64
     bucket, knn = _range_bucket_sql(first, nb, "__plo", "__pwd")
     stats = (
@@ -14349,16 +13989,9 @@ def _select_clause_spans(toks: list[str], s: int, e: int):
     ):
         return None
     clause: dict[str, int] = {}
-    depth = 0
-    idx = i + 1
-    while idx < e:
-        t = toks[idx]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t):
-            u = t.upper()
+    for idx in _top_level(toks, i + 1, e):
+        if _is_ident(toks[idx]):
+            u = toks[idx].upper()
             if u in (
                 "HAVING", "QUALIFY", "SETTINGS", "WINDOW", "PREWHERE",
                 "UNION", "EXCEPT", "INTERSECT", "FORMAT", "WITH",
@@ -14375,7 +14008,6 @@ def _select_clause_spans(toks: list[str], s: int, e: int):
                     if u in clause:
                         return None
                     clause[u] = idx
-        idx += 1
     if "FROM" not in clause:
         return None
     order = [k for k in ("FROM", "WHERE", "GROUP", "ORDER", "LIMIT")
@@ -15019,22 +14651,10 @@ def _gc_replan(toks: list[str], s: int, e: int):
     # ASOF/ANY/PASTE/ARRAY/LATERAL keep the
     # slice form (their rewrites own the statement shape)
     fcode = [t for t in _tokens(from_text) if not _is_skippable(t)]
-    depth = 0
-    joined = False
-    for t in fcode:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() in (
-            "LATERAL", "ARRAY", "PASTE", "ASOF", "ANY",
-        ):
-            return None
-        elif depth == 0 and (
-            t == "," or (_is_ident(t) and t.upper() == "JOIN")
-        ):
-            joined = True
-    if joined:
+    top = {fcode[k].upper() for k in _top_level(fcode)}
+    if top & {"LATERAL", "ARRAY", "PASTE", "ASOF", "ANY"}:
+        return None
+    if top & {",", "JOIN"}:
         return _gc_replan_joined(spans)
     acode = fcode[:-1] if fcode and fcode[-1].upper() == "FINAL" \
         else fcode
@@ -15080,13 +14700,8 @@ def _gc_replan(toks: list[str], s: int, e: int):
     # any parametric groupConcat OUTSIDE the select span.  Only a
     # PROJECTION star counts — after SELECT / ',' / '.' — never
     # depth-0 multiplication
-    depth = 0
-    for n, t in enumerate(sel_toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t == "*":
+    for n in _top_level(sel_toks):
+        if sel_toks[n] == "*":
             p = _prev_code(sel_toks, n - 1)
             prev = sel_toks[p] if p >= 0 else ""
             if prev in (".", ",", ""):
@@ -15341,16 +14956,7 @@ def _rewrite_distinct_window(sql: str) -> str:
                         # NULL rule (row skipped when ANY is NULL)
                         # has no struct spelling — leave it to fail
                         # loudly
-                        depth = 0
-                        multi = False
-                        for it in _tokens(inner):
-                            if it in ("(", "["):
-                                depth += 1
-                            elif it in (")", "]"):
-                                depth -= 1
-                            elif it == "," and depth == 0:
-                                multi = True
-                                break
+                        multi = len(_split_commas(_tokens(inner))) > 1
                         # the OVER clause moves INSIDE size(): a
                         # parenthesized spec or a named window
                         spec_i = _next_code(toks, after + 1)
@@ -15396,30 +15002,6 @@ _INNER_AGG_HEADS = frozenset(
 )
 
 
-def _prev_code(toks: list[str], i: int) -> int:
-    """Index of the previous non-whitespace, non-comment token, or
-    -1."""
-    while i >= 0 and _is_skippable(toks[i]):
-        i -= 1
-    return i
-
-
-def _match_open(toks: list[str], close_i: int) -> int:
-    """Backward twin of ``_match_close``: index of the '(' matching
-    the ')' at ``close_i``, or -1."""
-    depth = 0
-    k = close_i
-    while k >= 0:
-        if toks[k] == ")":
-            depth += 1
-        elif toks[k] == "(":
-            depth -= 1
-            if depth == 0:
-                return k
-        k -= 1
-    return -1
-
-
 def _rewrite_compound_window(sql: str) -> str:
     """Aggregate-as-window for COMPOUND-render heads (r16 audit
     batch 33): CH allows ANY aggregate as a window function, but a
@@ -15452,9 +15034,6 @@ def _rewrite_compound_window(sql: str) -> str:
             i += 1
             continue
         open_i = _match_open(toks, close_i)
-        if open_i < 0:
-            i += 1
-            continue
         head_i = _prev_code(toks, open_i - 1)
         has_head = head_i >= 0 and _is_ident(toks[head_i])
         if has_head and toks[head_i].lower() in _WINDOW_OK_HEADS:
@@ -15779,15 +15358,9 @@ def _frame_spec(spec: list[str]) -> tuple[bool, list[str], list[str]]:
     (numeric offsets are not identifiers, so ``2 PRECEDING`` reports
     as ``["PRECEDING"]``).  No explicit frame reports the SQL default
     ``RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW``."""
-    depth = 0
-    for i, t in enumerate(spec):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif (
-            depth == 1 and _is_ident(t)
-            and t.upper() in ("ROWS", "RANGE", "GROUPS")
+    for i in _top_level(spec, 1):
+        if (
+            spec[i].upper() in ("ROWS", "RANGE", "GROUPS")
             and _is_frame_kw(spec, i)
         ):
             words = [
@@ -15940,16 +15513,9 @@ def _guard_in_frame(toks: list[str]) -> list[str]:
                     "shared WINDOW definition would change its other "
                     "users — inline the spec on this call"
                 )
-            depth = 0
-            for wi in range(sp, sp_close + 1):
-                wtk = toks[wi]
-                if wtk == "(":
-                    depth += 1
-                elif wtk == ")":
-                    depth -= 1
-                elif (
-                    depth == 1 and _is_ident(wtk)
-                    and wtk.upper() in ("ROWS", "RANGE", "GROUPS")
+            for wi in _top_level(toks, sp + 1, sp_close):
+                if (
+                    toks[wi].upper() in ("ROWS", "RANGE", "GROUPS")
                     and _is_frame_kw(toks, wi)
                 ):
                     toks[wi:sp_close + 1] = [")"]
@@ -15996,13 +15562,7 @@ def _rewrite_window_derivative(toks: list[str]) -> list[str]:
                     ):
                         j4 = _next_code(toks, j3 + 1)
                         if j4 < n_ and toks[j4] == "(":
-                            depth, e = 1, j4 + 1
-                            while e < n_ and depth:
-                                if toks[e] == "(":
-                                    depth += 1
-                                elif toks[e] == ")":
-                                    depth -= 1
-                                e += 1
+                            e = _match_close(toks, j4) + 1
                             out.append(_exp_time_decayed(
                                 kind, params, args,
                                 "".join(toks[j4:e]),
@@ -16026,13 +15586,7 @@ def _rewrite_window_derivative(toks: list[str]) -> list[str]:
                 ):
                     j3 = _next_code(toks, j2 + 1)
                     if j3 < n_ and toks[j3] == "(":
-                        depth, e = 1, j3 + 1
-                        while e < n_ and depth:
-                            if toks[e] == "(":
-                                depth += 1
-                            elif toks[e] == ")":
-                                depth -= 1
-                            e += 1
+                        e = _match_close(toks, j3) + 1
                         if len(args) != 2:
                             raise DialectError(
                                 "nonNegativeDerivative OVER takes "
@@ -16046,15 +15600,9 @@ def _rewrite_window_derivative(toks: list[str]) -> list[str]:
                         # ROWS/RANGE clause from the window copy (lag
                         # is frame-insensitive, so semantics hold)
                         wt = toks[j3:e]
-                        depth2 = 0
-                        for wi, wtk in enumerate(wt):
-                            if wtk == "(":
-                                depth2 += 1
-                            elif wtk == ")":
-                                depth2 -= 1
-                            elif (
-                                depth2 == 1 and _is_ident(wtk)
-                                and wtk.upper() in ("ROWS", "RANGE")
+                        for wi in _top_level(wt, 1):
+                            if (
+                                wt[wi].upper() in ("ROWS", "RANGE")
                                 and _is_frame_kw(wt, wi)
                             ):
                                 wt = wt[:wi] + [")"]
@@ -16098,14 +15646,7 @@ def _rewrite_tuple_index(sql: str) -> str:
             toks[i].isdigit() and p1 >= 0 and toks[p1] == "."
             and p2 >= 0 and toks[p2] == ")"
         ):
-            # match backward to the opening paren
-            depth, j = 1, p2 - 1
-            while j >= 0 and depth:
-                if toks[j] == ")":
-                    depth += 1
-                elif toks[j] == "(":
-                    depth -= 1
-                j -= 1
+            j = _match_open(toks, p2) - 1
             k = j  # token before the '('
             while k >= 0 and toks[k].isspace():
                 k -= 1
@@ -16129,7 +15670,7 @@ def _rewrite_tuple_index(sql: str) -> str:
                 if toks[inner] == "(":
                     # pure paren-in-paren: descend without a call
                     mc = _match_close(toks, inner)
-                    if mc < 0 or _next_code(toks, mc + 1) != p2:
+                    if _next_code(toks, mc + 1) != p2:
                         break
                     j, p2 = inner - 1, mc
                     continue
@@ -16139,23 +15680,18 @@ def _rewrite_tuple_index(sql: str) -> str:
                 if nx < 0 or nx >= p2 or toks[nx] != "(":
                     break
                 mc = _match_close(toks, nx)
-                if mc < 0 or _next_code(toks, mc + 1) != p2:
+                if _next_code(toks, mc + 1) != p2:
                     break
                 k, j, p2 = inner, nx - 1, mc
             if k >= 0 and toks[k].lower() == "named_struct":
                 # field names: string literals at depth-1 positions
                 # 1, 3, 5… of the argument list
-                names, depth, argpos = [], 0, 0
-                for t in toks[j + 1:p2]:
-                    if t == "(":
-                        depth += 1
-                    elif t == ")":
-                        depth -= 1
-                    elif depth == 1:
-                        if t == ",":
-                            argpos += 1
-                        elif argpos % 2 == 0 and t[:1] in "'\"":
-                            names.append(t[1:-1])
+                names, argpos = [], 0
+                for q in _top_level(toks, j + 2, p2):
+                    if toks[q] == ",":
+                        argpos += 1
+                    elif argpos % 2 == 0 and toks[q][:1] in "'\"":
+                        names.append(toks[q][1:-1])
                 n = int(toks[i])
                 if 1 <= n <= len(names):
                     toks[i] = f"`{names[n - 1]}`"
@@ -16167,24 +15703,18 @@ def _rewrite_tuple_index(sql: str) -> str:
                 # argument's actual name instead of assuming colN
                 # (code-review r13e: `tuple(a, b).1` must address
                 # `a`, not a nonexistent col1)
-                spans: list[list[str]] = [[]]
-                depth = 0
-                for t in toks[j + 2:p2]:
-                    if t in ("(", "["):
-                        depth += 1
-                    elif t in (")", "]"):
-                        depth -= 1
-                    if depth == 0 and t == ",":
-                        spans.append([])
-                    elif not t.isspace():
-                        spans[-1].append(t)
+                spans = [
+                    [t for t in sp if not t.isspace()]
+                    for sp in _split_commas(toks[j + 2:p2])
+                ]
                 n = int(toks[i])
                 if 1 <= n <= len(spans):
                     arg = spans[n - 1]
+                    # unwrap parens around the whole argument, not
+                    # two operand groups like (a) > (b)
                     while (
                         len(arg) >= 2 and arg[0] == "("
-                        and arg[-1] == ")"
-                        and _paren_whole(arg)
+                        and _match_close(arg, 0) == len(arg) - 1
                     ):
                         arg = arg[1:-1]
                     if arg and all(
@@ -16567,23 +16097,7 @@ def _apply_mutation(
         cond_text, resolve_columns=resolver, engine_info=engine_info
     )
     assigns: dict[str, str] = {}
-    # token-level split on depth-0 commas (string literals opaque)
-    toks = _tokens(assigns_text)
-    depth = 0
-    cur: list[str] = []
-    parts: list[str] = []
-    for t in toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if t == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(t)
-    parts.append("".join(cur))
-    for part in parts:
+    for part in ("".join(p) for p in _split_commas(_tokens(assigns_text))):
         col, _, expr = part.partition("=")
         col = col.strip()
         if not col or not expr.strip():
@@ -17091,10 +16605,7 @@ def run_clickhouse_script(
         # the DDL shape regexes) — drop them; inline/trailing comments
         # stay with the statement body
         toks = _tokens(stmt)
-        i0 = 0
-        while i0 < len(toks) and _is_skippable(toks[i0]):
-            i0 += 1
-        stmt = "".join(toks[i0:])
+        stmt = "".join(toks[_next_code(toks, 0):])
         if not stmt:
             continue
         if _re.match(r"(?is)\s*CREATE\s+DICTIONARY", stmt):
